@@ -43,11 +43,11 @@ def _spread(df: DataFrame) -> DataFrame:
     spreads rows across the cluster. At production scale inputs arrive as
     many splits and this is a no-op — the partition-count check is plan
     metadata, not a job. Results are unaffected: consumers below a spread
-    are per-row deterministic expressions, exact (integer/min/max/count)
-    aggregates, or float aggregates whose input order is already arbitrary
-    today (corpus_prep's avg(quality) reaches its groupBy through shuffled
-    joins). The TPC-H revenue sums — double sums whose addition order is
-    TODAY still the single-split scan order — deliberately do not use it."""
+    are per-row deterministic expressions or order-independent aggregates
+    (integer/min/max/count, averages of integer columns; corpus_prep's
+    avg_quality sums integer units, functions/text.mean_4dp_col). The TPC-H
+    revenue sums — double sums whose addition order is TODAY still the
+    single-split scan order — deliberately do not use it."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
@@ -625,7 +625,7 @@ def corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("bpe").cast("long").alias("total_bpe_tokens"),
-            F.round(F.avg("quality"), 4).alias("avg_quality"),
+            TX.mean_4dp_col("quality").alias("avg_quality"),
         )
     )
     return _materialize_and_release(out, caches)
@@ -1180,7 +1180,7 @@ def _sql_refined_ctes() -> str:
                      from banded a join banded b
                        on a.band = b.band and a.band_key = b.band_key and a.doc < b.doc),
             -- refinement on the portable 60-bit shingle hash, matching the
-            -- engine's shared hashed_shingles pass (operators/dedup.py)
+            -- engine's shingle kernel (operators/dedup.py)
             shg as (select doc, cast(('0x' || substr(md5(sh), 1, 15)) as bigint) as h
                     from (select doc_id as doc, unnest(list_distinct({DD.sql_shingles('text', 3)})) as sh from corpus)),
             sizes as (select doc, count(*) as sz from shg group by 1),
@@ -1678,7 +1678,7 @@ def oracle_sql() -> dict[str, str]:
                            from final))
             select lang_guess, count(*) as n_docs,
                    cast(sum(bpe) as bigint) as total_bpe_tokens,
-                   round(avg(quality), 4) as avg_quality
+                   {TX.sql_mean_4dp('quality')} as avg_quality
             from (select case when s_de >= s_en and s_de >= s_fr then 'de'
                               when s_en >= s_fr then 'en' else 'fr' end as lang_guess,
                          bpe, quality

@@ -4,7 +4,6 @@ Reference behavior being re-expressed (see SURVEY.md §2.8):
   - F1  host extraction            (reference: search_common.py:152-153 urlparse().hostname)
   - F2  root-URL normalization     (reference: brave_search.py:114-115 f"{scheme}://{netloc}")
   - P1  blacklist domain filter    (reference: search_common.py:22,158-160 substring-of-host)
-  - P4  .ch-domain predicate       (reference: search_common.py:168,265 endswith('.ch'))
   - F19 url hash                   (engine addition: the seen-set / salting key)
 
 Two exactly-agreeing implementations of canonicalization exist:
@@ -138,11 +137,6 @@ def is_blacklisted_col(host: Column, blacklist: tuple[str, ...] = BLACKLIST) -> 
     """True when any blacklist entry is a substring of host (reference P1)."""
     arr = F.array(*[F.lit(b) for b in blacklist])
     return F.exists(arr, lambda b: F.contains(host, b))
-
-
-def is_ch_domain_col(host: Column) -> Column:
-    """Reference P4: host.endswith('.ch') (search_common.py:168,265)."""
-    return F.endswith(host, F.lit(".ch"))
 
 
 # --------------------------------------------------------------- Python twin

@@ -38,7 +38,9 @@ def name_tokens_col(name: Column) -> Column:
 
 
 def host_match_features(name: Column, host: Column) -> dict[str, Column]:
-    """P3: the two heuristic features of the candidate shaping projection."""
+    """P3: the two heuristic features of the candidate shaping projection;
+    ``is_ch_domain`` is reference P4, host.endswith('.ch')
+    (search_common.py:168,265)."""
     main_part = F.element_at(F.split(normalized_name_col(name), r"\s+"), 1)
     no_spaces = F.regexp_replace(normalized_name_col(name), r"\s+", "")
     return {

@@ -14,6 +14,8 @@ Spark, Python, and DuckDB — the basis for minhash/simhash oracle parity.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -127,6 +129,22 @@ def _floor_q(x: Column) -> Column:
     return F.floor(x * 10000) / 10000
 
 
+def _units_4dp(name: str) -> str:
+    return f"cast(round({name} * 10000) as bigint)"
+
+
+def mean_4dp_col(name: str) -> Column:
+    """Aggregate: the mean of a non-negative 4-dp column, rounded half-up to
+    4 dp, exactly. ``round(avg(x), 4)`` depends on the order the doubles are
+    summed in, so two engines can land on opposite sides of a 5th-decimal
+    tie (0.8091, 0.9931, 0.9193, 0.7527 sum to a mean just below 0.86855 in
+    one order and exactly on it in the other). Integer units round(x*10000)
+    sum exactly, and (2*sum + n) div (2*n) is integer round-half-up of
+    sum / n. SQL twin: :func:`sql_mean_4dp`."""
+    u = _units_4dp(name)
+    return F.expr(f"(2 * sum({u}) + count({u})) div (2 * count({u})) / 10000")
+
+
 def dup_line_fraction_col(text: Column) -> Column:
     """Gopher-style repetition rule: fraction of non-empty lines that are
     duplicates of an earlier line (1 - distinct/total; 0 for empty docs)."""
@@ -201,6 +219,11 @@ def sql_portable_hash64(expr: str) -> str:
     return f"cast(('0x' || substr(md5({expr}), 1, 15)) as bigint)"
 
 
+def sql_mean_4dp(name: str) -> str:
+    u = _units_4dp(name)
+    return f"(2 * sum({u}) + count({u})) // (2 * count({u})) / 10000"
+
+
 def sql_tokens(expr: str) -> str:
     return f"list_filter(string_split({expr}, ' '), t -> t <> '')"
 
@@ -217,6 +240,29 @@ def sql_fingerprint(expr: str) -> str:
 
 
 # ----------------------------------------------------- Arrow-batched battery
+# Python twins of the column expressions, shared by every Arrow pass.
+
+# BPE_ISH_RE under re.ASCII: \d = [0-9] and \s = [ \t\n\x0b\f\r], exactly
+# Java's default classes, so the match counts equal regexp_extract_all's.
+_BPE_ISH_PY = re.compile(BPE_ISH_RE, re.ASCII)
+_LANGS_REV = sorted(LANG_MARKERS, reverse=True)  # nrank asc = name desc
+_MARKER_SETS = {lg: frozenset(words) for lg, words in LANG_MARKERS.items()}
+
+
+def _tokens_py(txt: str | None) -> list[str]:
+    """Python twin of :func:`tokens_col` — split on single spaces, drop
+    empty tokens. Identical token lists by construction."""
+    return [t for t in (txt or "").split(" ") if t]
+
+
+def _lang_guess_py(low: list[str]) -> tuple[str, dict[str, int]]:
+    """Python twin of :func:`lang_id_col` / :func:`lang_score_col` over the
+    lowercased tokens: (guess, per-language marker hits). Ties break like the
+    greatest()-over-structs form: max over (score, nrank, lang)."""
+    scores = {lg: sum(1 for x in low if x in ms) for lg, ms in _MARKER_SETS.items()}
+    return max((scores[lg], i, lg) for i, lg in enumerate(_LANGS_REV))[2], scores
+
+
 def _metrics_batch_fn():
     """mapInArrow body for :func:`text_metrics_arrow` — exact Python twins of
     the column expressions above, one pass per doc (guide §4.2: the HOF
@@ -225,27 +271,22 @@ def _metrics_batch_fn():
 
     - every count is an exact int (tokens, lines, grams, marker hits,
       translate-deletion char counts, regex match counts — the Python
-      patterns spell out Java's default ASCII \\d/\\s classes);
+      patterns run under re.ASCII, Java's default \\d/\\s classes);
     - every double is produced by the SAME IEEE op sequence as the column
       form (int/int division, left-to-right weighted sum for quality,
       ``floor(x * 10000) / 10000`` quantization), so values are
       bit-identical, not merely close;
-    - lang_id ties break exactly like the greatest()-over-structs form: max
-      over (score, nrank, lang) with nrank from reverse-sorted names.
+    - lang_id ties break as in :func:`_lang_guess_py`.
     """
 
     def run(batches):
         import math
-        import re
 
         import pyarrow as pa
 
-        bpe_re = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]")
         ell_re = re.compile(r"\.\.\.")
         del_alnum_ws = str.maketrans("", "", _ALNUM_WS)
         del_alpha = str.maketrans("", "", _ALPHA)
-        langs_rev = sorted(LANG_MARKERS, reverse=True)  # nrank asc = name desc
-        markers = {lg: frozenset(LANG_MARKERS[lg]) for lg in LANG_MARKERS}
         stop = frozenset(STOPWORDS_EN)
         floor = math.floor
 
@@ -259,16 +300,14 @@ def _metrics_batch_fn():
             }
             for txt in texts:
                 t = txt or ""
-                toks = [x for x in t.split(" ") if x]
-                low = [x for x in t.lower().split(" ") if x]
+                toks = _tokens_py(t)
+                low = _tokens_py(t.lower())
                 nt = len(toks)
-                scores = {lg: sum(1 for x in low if x in markers[lg]) for lg in markers}
+                guess, scores = _lang_guess_py(low)
                 cols["s_en"].append(scores["en"])
                 cols["s_de"].append(scores["de"])
                 cols["s_fr"].append(scores["fr"])
-                cols["lang_guess"].append(
-                    max((scores[lg], i, lg) for i, lg in enumerate(langs_rev))[2]
-                )
+                cols["lang_guess"].append(guess)
                 n = len(t)
                 len_part = min(n / 500.0, 1.0)
                 punct_ratio = len(t.translate(del_alnum_ws)) / max(n, 1)
@@ -276,7 +315,7 @@ def _metrics_batch_fn():
                 raw = 0.4 * len_part + 0.3 * (1.0 - punct_ratio) + 0.3 * alpha_ratio
                 cols["quality"].append(floor(raw * 10000) / 10000)
                 cols["ws_tokens"].append(nt)
-                cols["bpe_tokens"].append(len(bpe_re.findall(t)))
+                cols["bpe_tokens"].append(len(_BPE_ISH_PY.findall(t)))
                 cols["stopword_ratio"].append(
                     sum(1 for x in low if x in stop) / max(nt, 1)
                 )
@@ -333,34 +372,21 @@ def text_metrics_arrow(df, id_col: str, text_col: str):
 
 def _lang_bpe_fn():
     """mapInArrow body for :func:`lang_bpe_quality_arrow`: lang_id + BPE-ish
-    token count (exact Python twins, same argument as _metrics_batch_fn)
-    with the precomputed quality column passed through untouched."""
+    token count (the same Python twins as _metrics_batch_fn) with the
+    precomputed quality column passed through untouched."""
 
     def run(batches):
-        import re
-
         import pyarrow as pa
 
-        bpe_re = re.compile(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]")
-        langs_rev = sorted(LANG_MARKERS, reverse=True)
-        markers = {lg: frozenset(LANG_MARKERS[lg]) for lg in LANG_MARKERS}
         for batch in batches:
-            texts = batch.column("text").to_pylist()
-            quality = batch.column("quality")
             guesses: list[str] = []
             bpes: list[int] = []
-            for txt in texts:
+            for txt in batch.column("text").to_pylist():
                 t = txt or ""
-                low = [x for x in t.lower().split(" ") if x]
-                guesses.append(
-                    max(
-                        (sum(1 for x in low if x in markers[lg]), i, lg)
-                        for i, lg in enumerate(langs_rev)
-                    )[2]
-                )
-                bpes.append(len(bpe_re.findall(t)))
+                guesses.append(_lang_guess_py(_tokens_py(t.lower()))[0])
+                bpes.append(len(_BPE_ISH_PY.findall(t)))
             yield pa.RecordBatch.from_arrays(
-                [pa.array(guesses, pa.string()), pa.array(bpes, pa.int64()), quality],
+                [pa.array(guesses, pa.string()), pa.array(bpes, pa.int64()), batch.column("quality")],
                 names=["lang_guess", "bpe", "quality"],
             )
 

@@ -37,12 +37,8 @@ def contamination_hits(
     over the doc's distinct shingle set); example_shingle is the
     lexicographically-first hit, for audit trails.
     """
-    # Round-6: both shingle passes run Arrow-batched (guide §4.2) — the
-    # column-expression form (transform/slice/array_join HOF + md5) stepped
-    # an interpreted lambda per shingle over the whole CORPUS, the one side
-    # of this operator that is 100-TB-sized. Same rows by construction
-    # (exploded_shingle_strings is the explode(array_distinct(...)) +
-    # portable_hash64 twin, shared with the dedup ladder).
+    # Both sides run the dedup ladder's shingle kernel; the corpus id passes
+    # through with its own type, so non-integral doc ids group correctly.
     from bravewebcrawler_spark.operators.dedup import exploded_shingle_strings
 
     bsh = (

@@ -9,11 +9,27 @@ SURVEY.md §2.4 A6); a 100 TB corpus needs the full ladder:
   SimHash         per-bit token-hash vote → bucket on the signature
   embedding       cosine near-dup (operators/similarity.py)
 
-Everything is expressed with built-in DataFrame ops (explode / groupBy /
-join) — shuffles land on shingle/band/bucket keys, partial aggregation is
-map-side, and no Python runs per row. All hashes are the portable md5-derived
-construction (functions/text.py) so every operator has an exact DuckDB oracle
-twin in __spark_entry__.oracle_sql.
+Shuffles land on shingle/band/bucket keys and partial aggregation is
+map-side. All hashes are the portable md5-derived construction
+(functions/text.py), so every operator has an exact DuckDB oracle twin in
+__spark_entry__.oracle_sql.
+
+One shingle kernel: :func:`_shingle_batch` is the only tokenize → k-window →
+join → md5 loop. It runs once per Arrow batch and returns each doc's distinct
+shingle count plus flat shingle-string and 60-bit-hash arrays, so the Python
+side is paid once per batch with columnar outputs (a column-expression
+shingle build steps an interpreted lambda per shingle). Three thin adapters
+run it through :func:`_shingle_pass`, which carries the id column through
+with its input type:
+
+  exploded_shingle_strings  (doc, sh, shh): the id repeated by counts
+                            (decontamination)
+  minhash_sig_and_arrays    (doc, hs, m0..m15): hash arrays from the offsets,
+                            minima by a NumPy segment-min (lsh_refined_pairs)
+  minhash_signature_cols    (doc, m0..m15): the minima only (minhash_lsh_pairs)
+
+Each equals its column-form reference (explode(array_distinct(shingles_col))
++ portable_hash64, and the group-min of (a_j*h + b_j) mod P) row for row.
 
 Scale notes: shingle explode multiplies rows by ~tokens-per-doc — at 100 TB
 the LSH path (fixed 16-value signature per doc, then tiny band keys) is the
@@ -25,20 +41,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
-from bravewebcrawler_spark.functions.text import portable_hash64, tokens_col
+from bravewebcrawler_spark.functions.text import _tokens_py, portable_hash64, tokens_col
 
 MINHASH_P = 1_000_000_007
 NUM_HASHES = 16
 NUM_BANDS = 4  # 4 rows per band
-
-
-def _hash_a(j: int) -> int:
-    return 2 * j + 3
-
-
-def _hash_b(j: int) -> int:
-    return 5 * j + 7
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -97,346 +106,136 @@ def jaccard_pairs(df: DataFrame, id_col: str, text_col: str, k: int = 3, thresho
     )
 
 
-def _tokens_py(txt: str | None) -> list[str]:
-    """Python twin of functions.text.tokens_col — split on single spaces,
-    drop empty tokens. Identical token lists by construction."""
-    return [t for t in (txt or "").split(" ") if t]
+def _shingle_batch(texts: list[str | None], k: int):
+    """The shingle kernel: the one tokenize → k-window → join → md5 loop,
+    run over a whole Arrow batch of texts. Returns flat columnar outputs:
+
+      counts    int64[n_docs] — distinct k-shingles per doc (0 below k tokens)
+      shingles  list[str]     — each doc's distinct shingles in first-seen
+                                order, docs concatenated in batch order
+      hashes    int64[len(shingles)] — the portable 60-bit hash per shingle
+
+    Distinctness is by shingle STRING, as the DuckDB twins' ``list_distinct``
+    is, and md5 runs once per distinct shingle. hashlib.md5 == Spark md5 ==
+    DuckDB md5 over the same UTF-8 bytes, and int(hexdigest[:15], 16) ==
+    :func:`portable_hash64`.
+    """
+    import hashlib
+
+    import numpy as np
+
+    counts = np.empty(len(texts), dtype=np.int64)
+    shingles: list[str] = []
+    for i, txt in enumerate(texts):
+        toks = _tokens_py(txt)
+        distinct = dict.fromkeys(" ".join(toks[j : j + k]) for j in range(len(toks) - k + 1))
+        counts[i] = len(distinct)
+        shingles.extend(distinct)
+    md5 = hashlib.md5
+    hashes = np.fromiter(
+        (int(md5(s.encode("utf-8")).hexdigest()[:15], 16) for s in shingles),
+        dtype=np.int64,
+        count=len(shingles),
+    )
+    return counts, shingles, hashes
 
 
-def _shingle_hash_fn(k: int):
-    """mapInArrow body for :func:`hashed_shingles`: per doc, the 60-bit md5
-    hash of each distinct k-shingle. hashlib.md5 == Spark md5 == DuckDB md5
-    (same algorithm over the same UTF-8 bytes), and
-    int(hexdigest[:15], 16) == conv(substring(md5(s),1,15),16,10)."""
+def _minhash_minima(counts, hashes) -> list:
+    """Per hash function j, the minima of (a_j*h + b_j) mod P over each
+    doc's hashes, h = H mod P — one NumPy segment-min per j, one value per
+    doc with ``counts > 0``. Exact int64 math: h < P and a_j <= 35 keep
+    a_j*h + b_j < 2^63."""
+    import numpy as np
+
+    starts = (np.cumsum(counts) - counts)[counts > 0]
+    h = hashes % MINHASH_P
+    return [
+        np.minimum.reduceat((h * (2 * j + 3) + (5 * j + 7)) % MINHASH_P, starts)
+        for j in range(NUM_HASHES)
+    ]
+
+
+def _emit_exploded(ids, counts, shingles, hashes) -> list:
+    """(doc, sh, shh): the id column repeated by ``counts``."""
+    import numpy as np
+    import pyarrow as pa
+
+    rows = pa.array(np.repeat(np.arange(len(counts)), counts))
+    return [ids.take(rows), pa.array(shingles, pa.string()), pa.array(hashes, pa.int64())]
+
+
+def _emit_sig_and_arrays(ids, counts, shingles, hashes) -> list:
+    """(doc, hs, m0..m15): every doc, its hashes as one list cell, NULL
+    minima where it has no shingles."""
+    import numpy as np
+    import pyarrow as pa
+
+    offsets = pa.array(np.concatenate([[0], np.cumsum(counts)]), pa.int32())
+    has = counts > 0
+    mins = []
+    for m in _minhash_minima(counts, hashes):
+        full = np.zeros(len(counts), dtype=np.int64)
+        full[has] = m
+        mins.append(pa.array(full, mask=~has))
+    return [ids, pa.ListArray.from_arrays(offsets, pa.array(hashes, pa.int64())), *mins]
+
+
+def _emit_signature(ids, counts, shingles, hashes) -> list:
+    """(doc, m0..m15): the docs with shingles only."""
+    import pyarrow as pa
+
+    return [ids.filter(pa.array(counts > 0)), *map(pa.array, _minhash_minima(counts, hashes))]
+
+
+_SIG_FIELDS = [StructField(f"m{j}", LongType()) for j in range(NUM_HASHES)]
+
+
+def _shingle_pass(df: DataFrame, id_col: str, text_col: str, k: int, emit, fields: list) -> DataFrame:
+    """One mapInArrow pass of (doc, text) through :func:`_shingle_batch`;
+    ``emit(ids, counts, shingles, hashes)`` turns a batch's kernel output
+    into the columns ``doc, *fields``. The id column passes through
+    unchanged, so ``doc`` keeps the input id's type."""
+    src = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("text"))
+    schema = StructType([src.schema["doc"], *fields])
+    names = schema.names
 
     def run(batches):
-        import hashlib
-
         import pyarrow as pa
 
         for batch in batches:
-            ids = batch.column("doc").to_pylist()
-            texts = batch.column("text").to_pylist()
-            out_d: list[int] = []
-            out_h: list[int] = []
-            ap_d, ap_h = out_d.append, out_h.append
-            md5 = hashlib.md5
-            for d, txt in zip(ids, texts):
-                toks = _tokens_py(txt)
-                n = len(toks)
-                if n < k:
-                    continue
-                seen: set[str] = set()
-                add = seen.add
-                for i in range(n - k + 1):
-                    s = " ".join(toks[i : i + k])
-                    if s not in seen:
-                        add(s)
-                        ap_d(d)
-                        ap_h(int(md5(s.encode("utf-8")).hexdigest()[:15], 16))
-            if out_d:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out_d, pa.int64()), pa.array(out_h, pa.int64())],
-                    names=["doc", "H"],
-                )
+            out = _shingle_batch(batch.column("text").to_pylist(), k)
+            yield pa.RecordBatch.from_arrays(emit(batch.column("doc"), *out), names=names)
 
-    return run
-
-
-def _shingle_hash_array_fn(k: int):
-    """mapInArrow body for :func:`shingle_hash_arrays`: per doc, the full
-    DISTINCT shingle-hash set as ONE list<int64> cell (same 60-bit md5
-    values as :func:`hashed_shingles`, grouped per doc inside the batch so
-    no groupBy shuffle is ever needed to reassemble the set)."""
-
-    def run(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column("doc").to_pylist()
-            texts = batch.column("text").to_pylist()
-            out_d: list[int] = []
-            out_hs: list[list[int]] = []
-            md5 = hashlib.md5
-            for d, txt in zip(ids, texts):
-                toks = _tokens_py(txt)
-                n = len(toks)
-                if n < k:
-                    out_d.append(d)
-                    out_hs.append([])
-                    continue
-                seen: set[int] = set()
-                add = seen.add
-                for i in range(n - k + 1):
-                    add(int(md5(" ".join(toks[i : i + k]).encode("utf-8")).hexdigest()[:15], 16))
-                out_d.append(d)
-                out_hs.append(list(seen))
-            if out_d:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out_d, pa.int64()), pa.array(out_hs, pa.list_(pa.int64()))],
-                    names=["doc", "hs"],
-                )
-
-    return run
-
-
-def _shingle_string_fn(k: int):
-    """mapInArrow body for :func:`exploded_shingle_strings`: per doc, one row
-    per DISTINCT k-shingle carrying the shingle STRING and its portable
-    60-bit hash (same int(md5[:15],16) construction as everywhere else)."""
-
-    def run(batches):
-        import hashlib
-
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column("doc").to_pylist()
-            texts = batch.column("text").to_pylist()
-            out_d: list[int] = []
-            out_s: list[str] = []
-            out_h: list[int] = []
-            md5 = hashlib.md5
-            for d, txt in zip(ids, texts):
-                toks = _tokens_py(txt)
-                n = len(toks)
-                if n < k:
-                    continue
-                seen: set[str] = set()
-                add = seen.add
-                for i in range(n - k + 1):
-                    s = " ".join(toks[i : i + k])
-                    if s not in seen:
-                        add(s)
-                        out_d.append(d)
-                        out_s.append(s)
-                        out_h.append(int(md5(s.encode("utf-8")).hexdigest()[:15], 16))
-            if out_d:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out_d, pa.int64()), pa.array(out_s, pa.string()), pa.array(out_h, pa.int64())],
-                    names=["doc", "sh", "shh"],
-                )
-
-    return run
+    return src.mapInArrow(run, schema)
 
 
 def exploded_shingle_strings(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """(doc, sh, shh) — one row per DISTINCT k-shingle per doc with both the
     string (for collision-proof confirms / audit examples) and its portable
-    hash, from one Arrow-batched pass. Equals
-    ``explode(array_distinct(shingles_col)) + portable_hash64`` row-for-row;
-    exists because the column-expression shingle build steps an interpreted
-    HOF lambda per element (guide §4.2 — decontamination over the corpus
-    measured the HOF pass at ~25 µs/shingle vs ~1 µs in batched Python)."""
-    return df.select(
-        F.col(id_col).cast("long").alias("doc"), F.col(text_col).alias("text")
-    ).mapInArrow(_shingle_string_fn(k), "doc long, sh string, shh long")
-
-
-def shingle_hash_arrays(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(doc, hs: array<long>) — each doc's DISTINCT shingle-hash set as one
-    array cell, from a single Arrow-batched pass (guide §4.2). The row-per-
-    shingle twin is :func:`hashed_shingles`; this form exists for consumers
-    that need whole sets per doc (exact-Jaccard refinement): set size is
-    ``size(hs)`` and the intersection count is ``size(array_intersect)`` —
-    no explode, no groupBy, no shingle-level shuffle at all."""
-    return df.select(
-        F.col(id_col).cast("long").alias("doc"), F.col(text_col).alias("text")
-    ).mapInArrow(_shingle_hash_array_fn(k), "doc long, hs array<long>")
-
-
-def hashed_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(doc, H) — the portable 60-bit hash of each DISTINCT k-shingle per doc.
-
-    The ONE pass over the text that every shingle-based operator can share:
-    set sizes and intersection counts derive from it, so everything
-    downstream shuffles 16-byte (doc, long) rows instead of shingle strings.
-
-    Round-6: the pass runs as an Arrow-batched Python transform
-    (optimization guide §4.2). The previous column-expression form
-    (transform/slice/array_join + md5 per shingle) evaluated its
-    higher-order-function lambdas per ELEMENT outside whole-stage codegen —
-    measured ~79 core-seconds for the sf1.0 corpus's 3.2M shingles (~25 µs
-    per shingle); the same work as a Python loop over Arrow batches with C
-    ``hashlib.md5`` is ~7 core-seconds. Values are bit-identical (same md5
-    over the same UTF-8 bytes, same hex-prefix integer), pytest/oracle
-    checked, and only (doc, text) crosses the boundary.
-    """
-    return df.select(
-        F.col(id_col).cast("long").alias("doc"), F.col(text_col).alias("text")
-    ).mapInArrow(_shingle_hash_fn(k), "doc long, H long")
-
-
-def _minhash_sig_fn(k: int):
-    """mapInArrow body for the direct signature pass: per doc, the 16
-    minhash values over its distinct shingle-hash set, computed with one
-    NumPy segment-min per hash function. Exact integer math: h < P and
-    a_j <= 35 keep a_j*h + b_j < 2^63, so int64 never wraps; min over the
-    distinct set equals min over all occurrences; distinct-ness taken on the
-    hash values is min-equivalent to distinct-ness on the shingle strings
-    (a 60-bit collision merges equal values, which cannot change a min)."""
-
-    def run(batches):
-        import hashlib
-
-        import numpy as np
-        import pyarrow as pa
-
-        coeffs = [(2 * j + 3, 5 * j + 7) for j in range(NUM_HASHES)]
-        for batch in batches:
-            ids = batch.column("doc").to_pylist()
-            texts = batch.column("text").to_pylist()
-            doc_out: list[int] = []
-            counts: list[int] = []
-            flat: list[int] = []
-            md5 = hashlib.md5
-            for d, txt in zip(ids, texts):
-                toks = _tokens_py(txt)
-                n = len(toks)
-                if n < k:
-                    continue
-                hs: set[int] = set()
-                add = hs.add
-                for i in range(n - k + 1):
-                    s = " ".join(toks[i : i + k])
-                    add(int(md5(s.encode("utf-8")).hexdigest()[:15], 16) % MINHASH_P)
-                doc_out.append(d)
-                counts.append(len(hs))
-                flat.extend(hs)
-            if not doc_out:
-                continue
-            H = np.array(flat, dtype=np.int64)
-            offs = np.zeros(len(counts), dtype=np.int64)
-            np.cumsum(counts[:-1], out=offs[1:])
-            cols = [
-                pa.array(np.minimum.reduceat((H * a + b) % MINHASH_P, offs), pa.int64())
-                for a, b in coeffs
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_out, pa.int64()), *cols],
-                names=["doc", *[f"m{j}" for j in range(NUM_HASHES)]],
-            )
-
-    return run
-
-
-def _sig_and_array_fn(k: int):
-    """mapInArrow body for :func:`minhash_sig_and_arrays`: per doc, BOTH the
-    distinct raw shingle-hash set (one list<int64> cell, as
-    :func:`_shingle_hash_array_fn`) and the 16 minhash minima (as
-    :func:`_minhash_sig_fn`) from a single shingling of the text. Minima are
-    taken over the raw set reduced mod P — the same values as the
-    set-of-mod-P construction because a mod-P collision merges equal
-    values, which cannot change a min. Docs with no shingles (< k tokens)
-    emit an empty set and NULL minima (the signature pass emitted no row
-    for them; callers filter on ``size(hs) > 0`` to recover that row set
-    exactly)."""
-
-    def run(batches):
-        import hashlib
-
-        import numpy as np
-        import pyarrow as pa
-
-        coeffs = [(2 * j + 3, 5 * j + 7) for j in range(NUM_HASHES)]
-        for batch in batches:
-            ids = batch.column("doc").to_pylist()
-            texts = batch.column("text").to_pylist()
-            out_d: list[int] = []
-            out_hs: list[list[int]] = []
-            counts: list[int] = []
-            flat: list[int] = []
-            sig_rows: list[int] = []  # indices into out_d that have shingles
-            md5 = hashlib.md5
-            for d, txt in zip(ids, texts):
-                toks = _tokens_py(txt)
-                n = len(toks)
-                out_d.append(d)
-                if n < k:
-                    out_hs.append([])
-                    continue
-                seen: set[int] = set()
-                add = seen.add
-                for i in range(n - k + 1):
-                    add(int(md5(" ".join(toks[i : i + k]).encode("utf-8")).hexdigest()[:15], 16))
-                out_hs.append(list(seen))
-                sig_rows.append(len(out_d) - 1)
-                counts.append(len(seen))
-                flat.extend(seen)
-            if not out_d:
-                continue
-            mcols: list[list] = []
-            if sig_rows:
-                H = np.array(flat, dtype=np.int64) % MINHASH_P
-                offs = np.zeros(len(counts), dtype=np.int64)
-                np.cumsum(counts[:-1], out=offs[1:])
-                for a, b in coeffs:
-                    mins = np.minimum.reduceat((H * a + b) % MINHASH_P, offs)
-                    col: list = [None] * len(out_d)
-                    for pos, v in zip(sig_rows, mins):
-                        col[pos] = int(v)
-                    mcols.append(col)
-            else:
-                mcols = [[None] * len(out_d) for _ in coeffs]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_d, pa.int64()),
-                    pa.array(out_hs, pa.list_(pa.int64())),
-                    *[pa.array(c, pa.int64()) for c in mcols],
-                ],
-                names=["doc", "hs", *[f"m{j}" for j in range(NUM_HASHES)]],
-            )
-
-    return run
+    hash. Equals ``explode(array_distinct(shingles_col)) + portable_hash64``
+    row-for-row."""
+    fields = [StructField("sh", StringType()), StructField("shh", LongType())]
+    return _shingle_pass(df, id_col, text_col, k, _emit_exploded, fields)
 
 
 def minhash_sig_and_arrays(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(doc, hs, m0..m15) — the shingle-hash SET and the minhash signature
-    from ONE Arrow pass over the corpus. The refined-dedup chain consumes
-    both (candidates from the signature bands, exact Jaccard from the
-    sets); computing them together halves the Python passes over the text
-    (:func:`_sig_and_array_fn` for the value-equality argument)."""
-    return df.select(
-        F.col(id_col).cast("long").alias("doc"), F.col(text_col).alias("text")
-    ).mapInArrow(
-        _sig_and_array_fn(k),
-        "doc long, hs array<long>, " + ", ".join(f"m{j} long" for j in range(NUM_HASHES)),
-    )
+    """(doc, hs, m0..m15) — each doc's shingle-hash array (one hash per
+    distinct shingle string) and its minhash signature from one pass. The
+    refined-dedup chain takes candidates from the signature bands and exact
+    Jaccard from the arrays. Shingle-less docs (< k tokens) get an empty
+    ``hs`` and NULL minima; ``size(hs) > 0`` recovers exactly the rows of
+    :func:`minhash_signature_cols`."""
+    fields = [StructField("hs", ArrayType(LongType())), *_SIG_FIELDS]
+    return _shingle_pass(df, id_col, text_col, k, _emit_sig_and_arrays, fields)
 
 
-def minhash_signature_cols(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, shingle_hashes: DataFrame | None = None
-) -> DataFrame:
-    """Per-doc minhash signature as NUM_HASHES columns:
+def minhash_signature_cols(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
+    """Per-doc minhash signature as NUM_HASHES columns m0..m15:
     h_j(s) = (a_j * H(s) + b_j) mod P with H the portable 60-bit hash reduced
-    mod P; a_j <= 2*NUM_HASHES+3 keeps a_j*H < 2^63 (ANSI-safe).
-
-    Round-6 default path: ONE Arrow-batched Python pass over (doc, text)
-    computes shingle hashes and all 16 per-doc minima in place
-    (:func:`_minhash_sig_fn`) — each task's batch holds complete docs, so no
-    shuffle happens at all before the (doc, 16 longs) signature rows exist
-    (the former explode → 16-way min hash-aggregate measured ~53
-    core-seconds at sf1.0 for the aggregate alone, on top of a ~79
-    core-second shingle pass). Pass ``shingle_hashes`` (a
-    :func:`hashed_shingles` result, possibly persisted) to derive the
-    signature from an existing hash table instead — same values either way
-    (min over the distinct shingle set equals min over all occurrences).
-    """
-    if shingle_hashes is None:
-        return df.select(
-            F.col(id_col).cast("long").alias("doc"), F.col(text_col).alias("text")
-        ).mapInArrow(
-            _minhash_sig_fn(k),
-            "doc long, " + ", ".join(f"m{j} long" for j in range(NUM_HASHES)),
-        )
-    sh = shingle_hashes.select("doc", (F.col("H") % MINHASH_P).alias("h"))
-    aggs = [
-        F.min((F.col("h") * (2 * j + 3) + (5 * j + 7)) % MINHASH_P).alias(f"m{j}")
-        for j in range(NUM_HASHES)
-    ]
-    return sh.groupBy("doc").agg(*aggs)
+    mod P, a_j = 2j+3, b_j = 5j+7. Each task's batch holds complete docs, so
+    the (doc, 16 longs) rows exist without a shuffle. Docs with no shingles
+    emit no row."""
+    return _shingle_pass(df, id_col, text_col, k, _emit_signature, _SIG_FIELDS)
 
 
 def minhash_lsh_pairs(
@@ -444,7 +243,6 @@ def minhash_lsh_pairs(
     id_col: str,
     text_col: str,
     k: int = 3,
-    shingle_hashes: DataFrame | None = None,
     cache_registry: list | None = None,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
@@ -453,10 +251,9 @@ def minhash_lsh_pairs(
     The scale path: per doc only NUM_HASHES values survive; candidate
     generation shuffles on small (band, band_key) keys. Pairs are distinct
     (id_a < id_b); refinement (true Jaccard on candidates) is jaccard_pairs
-    restricted to these pairs. ``shingle_hashes`` is forwarded to
-    :func:`minhash_signature_cols`.
+    restricted to these pairs.
 
-    Band rows come from ONE signature aggregate + an explode of the 4
+    Band rows come from ONE signature pass + an explode of the 4
     per-band key structs — NOT a 4-way union of projections, which (with the
     2 self-join sides) re-ran the whole scan→shingle→md5→16-min-agg pipeline
     8x (measured: 24 parquet scans, 0 reused exchanges in the executed
@@ -472,11 +269,7 @@ def minhash_lsh_pairs(
     # pass of minhash_sig_and_arrays) — identical values to the direct pass
     # by construction, forwarded by lsh_refined_pairs so the corpus is
     # shingled once, not twice.
-    sig = (
-        signatures
-        if signatures is not None
-        else minhash_signature_cols(df, id_col, text_col, k, shingle_hashes=shingle_hashes)
-    )
+    sig = signatures if signatures is not None else minhash_signature_cols(df, id_col, text_col, k)
 
     def band_key(band: int):
         key = F.lit(0).cast("long")
@@ -523,23 +316,22 @@ def lsh_refined_pairs(
     pairs that provably cannot reach the threshold (J <= min_sz/max_sz)
     before the intersection join runs.
 
-    Two Arrow-batched Python passes over the corpus (round-6): the direct
-    signature pass (shingle → 16 minima inside one batch, no shuffle) and a
-    per-doc DISTINCT shingle-hash ARRAY pass (:func:`shingle_hash_arrays`,
-    semi-joined to candidate endpoints and persisted). The refinement is
-    then two equi-joins of the pair list against the array table plus
-    ``size(array_intersect)`` per surviving pair — the former shape
-    (explode the hash sets, join pairs through (doc, H) rows, re-aggregate)
-    shuffled every exploded (pair, H) row; this one shuffles each candidate
-    doc's set exactly once as one array cell, and the intersection runs as a
-    codegen'd JVM set-op per pair. Set sizes fall out as ``size(hs)``, so
-    the separate size aggregate is gone too. Jaccard on 60-bit shingle
-    hashes equals Jaccard on the shingle sets themselves absent a 60-bit
-    collision inside a candidate pair (~|set|^2 / 2^60) — and the DuckDB
-    oracle hashes identically, so parity is exact by construction either
-    way.
+    One kernel pass over the corpus (:func:`minhash_sig_and_arrays`) yields
+    both the signatures and the per-doc shingle-hash arrays. The refinement
+    is two equi-joins of the pair list against the arrays (semi-joined to
+    candidate endpoints) plus ``size(array_intersect)`` per surviving pair:
+    each candidate doc's set shuffles once as one array cell, and set sizes
+    are ``size(hs)``. Jaccard on 60-bit shingle hashes equals Jaccard on the
+    shingle sets absent a 60-bit collision inside a candidate pair
+    (~|set|^2 / 2^60), and the DuckDB oracle hashes identically.
+
+    ``threshold`` must lie in (0, 1]: at 0 every candidate pair would pass,
+    including pairs that share no shingle at all.
     """
     from pyspark import StorageLevel
+
+    if not 0 < threshold <= 1:
+        raise ValueError(f"lsh_refined_pairs: threshold must be in (0, 1], got {threshold}")
 
     # ONE Python pass over the corpus computes BOTH the signature (candidate
     # generation) and the shingle-hash sets (exact refinement) —
@@ -551,8 +343,7 @@ def lsh_refined_pairs(
     both = minhash_sig_and_arrays(df, id_col, text_col, k).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # size(hs) > 0 recovers exactly the row set the direct signature pass
-    # emits (it skips shingle-less docs; the combined pass NULL-pads them)
+    # size(hs) > 0 recovers exactly the rows of minhash_signature_cols
     sig = both.where(F.size("hs") > 0).select("doc", *[f"m{j}" for j in range(NUM_HASHES)])
     cand = minhash_lsh_pairs(
         df, id_col, text_col, k, cache_registry=cache_registry, signatures=sig

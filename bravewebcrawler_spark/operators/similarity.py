@@ -49,10 +49,6 @@ def norm_col(u: Column) -> Column:
     return F.sqrt(dot_col(u, u))
 
 
-def cosine_col(u: Column, v: Column) -> Column:
-    return dot_col(u, v) / (norm_col(u) * norm_col(v))
-
-
 def _dot_raw(u: Column, v: Column) -> Column:
     """Dot product over already-double arrays (no per-pair cast/copy)."""
     return F.aggregate(F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)

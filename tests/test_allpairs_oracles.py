@@ -99,6 +99,15 @@ def test_lsh_refined_equals_exact_jaccard_on_candidates(spark, sf_dir):
     assert recall >= 0.95, f"LSH recall {recall:.3f} on {len(exact)} true pairs"
 
 
+@pytest.mark.parametrize("threshold", [0.0, -0.5, 1.5])
+def test_lsh_refined_rejects_threshold_outside_unit_interval(spark, threshold):
+    # at threshold 0 every candidate pair would pass the jaccard filter,
+    # including pairs that share no shingle at all
+    docs = spark.createDataFrame([(1, "a b c d"), (2, "w x y z")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="threshold"):
+        DD.lsh_refined_pairs(docs, "doc_id", "text", k=3, threshold=threshold)
+
+
 def test_embed_lsh_recall_vs_exact(spark, sf_dir):
     """Hyperplane-bucketed near-dup pairs are a subset of the all-pairs
     answer with identical cosines; recall is pinned (cosine >= 0.99 pairs are

@@ -41,21 +41,45 @@ def _docs(spark):
     return real.unionByName(edge)
 
 
-def test_shingle_hash_arrays_equals_hashed_shingles(spark):
+def _minhash_reference(docs):
+    """Column-form reference for the k=3 minhash adapters: per doc, the
+    sorted hashes of ``explode(array_distinct(shingles_col)) +
+    portable_hash64`` and the group-min of (a_j*h + b_j) mod P, h = H mod P."""
+    sh = docs.select(
+        F.col("doc_id").alias("doc"),
+        F.explode(F.array_distinct(DD.shingles_col(F.col("text"), 3))).alias("sh"),
+    ).withColumn("H", TX.portable_hash64(F.col("sh")))
+    h = F.col("H") % DD.MINHASH_P
+    ref = sh.groupBy("doc").agg(
+        F.sort_array(F.collect_list("H")).alias("hs"),
+        *[
+            F.min((h * (2 * j + 3) + (5 * j + 7)) % DD.MINHASH_P).alias(f"m{j}")
+            for j in range(DD.NUM_HASHES)
+        ],
+    )
+    return {r["doc"]: r for r in ref.collect()}
+
+
+def test_minhash_adapters_equal_column_form(spark):
     docs = _docs(spark)
-    rows = DD.hashed_shingles(docs, "doc_id", "text", 3).collect()
-    want: dict[int, set[int]] = {}
-    for r in rows:
-        want.setdefault(r["doc"], set()).add(r["H"])
-    got = {
-        r["doc"]: set(r["hs"])
-        for r in DD.shingle_hash_arrays(docs, "doc_id", "text", 3).collect()
+    want = _minhash_reference(docs)
+    sig_cols = [f"m{j}" for j in range(DD.NUM_HASHES)]
+
+    both = {r["doc"]: r for r in DD.minhash_sig_and_arrays(docs, "doc_id", "text", 3).collect()}
+    # every doc gets a row; shingle-less docs an empty array and NULL minima
+    assert set(both) == {r["doc_id"] for r in docs.collect()}
+    for d, r in both.items():
+        if d in want:
+            assert sorted(r["hs"]) == want[d]["hs"], d
+            assert [r[c] for c in sig_cols] == [want[d][c] for c in sig_cols], d
+        else:
+            assert r["hs"] == [] and all(r[c] is None for c in sig_cols), d
+
+    sig = DD.minhash_signature_cols(docs, "doc_id", "text", 3).collect()
+    assert len(sig) == len(want)
+    assert {r["doc"]: [r[c] for c in sig_cols] for r in sig} == {
+        d: [w[c] for c in sig_cols] for d, w in want.items()
     }
-    # row-per-shingle form emits nothing for shingle-less docs; the array
-    # form emits an empty cell — same information
-    got_nonempty = {d: hs for d, hs in got.items() if hs}
-    assert got_nonempty == want
-    assert set(got) == {r["doc_id"] for r in docs.collect()}
 
 
 def test_exploded_shingle_strings_equals_column_form(spark):

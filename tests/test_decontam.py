@@ -38,19 +38,23 @@ def bench(spark):
     )
 
 
-def test_contamination_hits_exact_membership(docs, bench, spark):
-    got = {
-        r["doc_id"]: (r["n_hits"], r["example_shingle"])
-        for r in contamination_hits(docs, bench, k=5).collect()
-    }
+def test_contamination_hits_exact_membership(docs, bench):
     # doc 1 contains 'alpha beta gamma delta epsilon' -> 1 distinct hit
     # doc 3 contains it as a sub-span -> 1 hit; doc 5 contains the bench
-    # 5-gram twice but DISTINCT-counts it once; docs 2 starts with it too
-    assert got[1] == (1, "alpha beta gamma delta epsilon")
-    assert got[3] == (1, "alpha beta gamma delta epsilon")
-    assert got[2] == (1, "one two three four five")
-    assert got[5] == (1, "one two three four five")
-    assert 4 not in got  # shorter than k tokens -> no shingles -> clean
+    # 5-gram twice but DISTINCT-counts it once; docs 2 starts with it too.
+    # The corpus id keeps its own type: string ids must not collapse into
+    # one NULL group.
+    for id_type, key in (("long", int), ("string", str)):
+        corpus = docs.withColumn("doc_id", F.col("doc_id").cast(id_type))
+        hits = contamination_hits(corpus, bench, k=5)
+        assert hits.schema["doc_id"].dataType == corpus.schema["doc_id"].dataType
+        got = {r["doc_id"]: (r["n_hits"], r["example_shingle"]) for r in hits.collect()}
+        assert got[key(1)] == (1, "alpha beta gamma delta epsilon")
+        assert got[key(3)] == (1, "alpha beta gamma delta epsilon")
+        assert got[key(2)] == (1, "one two three four five")
+        assert got[key(5)] == (1, "one two three four five")
+        assert key(4) not in got  # shorter than k tokens -> no shingles -> clean
+        assert len(got) == 4, id_type
 
 
 def test_decontaminate_filters_in_place(docs, bench):

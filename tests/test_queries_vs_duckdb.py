@@ -40,6 +40,25 @@ def test_entry_smoke(spark):
     assert all(1 <= r["rn"] <= 3 for r in rows)
 
 
+def test_corpus_prep_avg_quality_rounding_tie(spark):
+    """corpus_prep's avg_quality at an exact 5th-decimal tie: the mean of
+    these four qualities is exactly 0.86855. Summed as doubles in list order
+    it is 0.86854999..., in reverse order 0.86855, so round(avg(quality), 4)
+    gave 0.8685 or 0.8686 depending on the engine's summation order. The
+    integer-unit form rounds half-up to 0.8686 in both engines, any order."""
+    import duckdb
+
+    from bravewebcrawler_spark.functions import text as TX
+
+    quals = [0.8091, 0.9931, 0.9193, 0.7527]
+    for order in (quals, quals[::-1]):
+        df = spark.createDataFrame([(q,) for q in order], "quality double").coalesce(1)
+        assert df.agg(TX.mean_4dp_col("quality").alias("a")).first()["a"] == 0.8686
+        rows = ", ".join(f"({q})" for q in order)
+        duck = duckdb.sql(f"select {TX.sql_mean_4dp('quality')} from (values {rows}) t(quality)")
+        assert duck.fetchone()[0] == 0.8686
+
+
 def test_no_residual_caches_after_cache_managed_queries(spark, sf_dir):
     """Deterministic cache lifecycle (VERDICT r2 #6): the queries that persist
     intermediates (lsh_refined_pairs' cand/sh, corpus_prep's uniq) must leave
