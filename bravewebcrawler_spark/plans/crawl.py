@@ -23,11 +23,13 @@ from pyspark.sql import functions as F
 from bravewebcrawler_spark.plans import checkpoint as ckpt
 from bravewebcrawler_spark.plans.policy import CrawlPolicy
 from bravewebcrawler_spark.plans.round import (
-    FRONTIER_SCHEMA,
     HOST_STATE_SCHEMA,
     SEEN_SCHEMA,
     admit_candidates,
     band_col,
+    band_counts,
+    merge_frontier,
+    observe_bands,
     robots_df,
     run_round,
 )
@@ -60,8 +62,6 @@ def initial_state(
     )
     # distinct canonical seeds (messy duplicates collapse); min-depth merge is
     # a no-op at depth 0 but reuses the shared rule
-    from bravewebcrawler_spark.plans.round import merge_frontier
-
     return {
         "frontier": merge_frontier(frontier),
         "seen": spark.createDataFrame([], SEEN_SCHEMA),
@@ -93,23 +93,22 @@ def crawl(
     robots = robots_df(spark, web)
     start_round = 0
     seen_size = 0
-    frontier_size = 0
     base_round = 0
     init_frontier = None  # fresh-start-only persist, released after round 0
-    band_hist: dict[int, int] | None = {} if policy.dequeue_band_pruning else None
+    # band -> frontier row count; a fresh crawl starts empty because round 0
+    # is a compaction round, whose snapshot write bases the histogram
+    band_hist: dict[int, int] = {}
     last = ckpt.latest_round(state_dir) if resume else None
     if last is not None:
         state = ckpt.load_state(spark, state_dir, last)
         frontier, seen, host_state = state["frontier"], state["seen"], state["host_state"]
         bloom = state["bloom"]
-        m = ckpt.load_metrics(state_dir, last)
-        seen_size = m["seen_size"]
-        frontier_size = m["frontier_size"]
+        seen_size = ckpt.load_metrics(state_dir, last)["seen_size"]
         base_round = ckpt.load_base_round(state_dir, last)
         start_round = last + 1
-        if policy.dequeue_band_pruning:
-            saved = ckpt.load_band_hist(state_dir, last)
-            band_hist = saved if saved is not None else {
+        band_hist = ckpt.load_band_hist(state_dir, last)
+        if band_hist is None:  # a manifest written before every round committed one
+            band_hist = {
                 int(r["b"]): r["count"]
                 for r in frontier.groupBy(band_col(F.col("priority")).alias("b")).count().collect()
             }
@@ -132,7 +131,6 @@ def crawl(
         st["dead_letter"].write.mode("overwrite").parquet(os.path.join(state_dir, "dead_letter"))
 
     total_fetched = 0
-    debug = os.environ.get("BWC_DEBUG_TIMING", "") == "1"
     from concurrent.futures import ThreadPoolExecutor
 
     write_pool = ThreadPoolExecutor(max_workers=4, thread_name_prefix="bwc-write")
@@ -142,18 +140,17 @@ def crawl(
             spark, web, frontier, seen, host_state, robots, policy, rnd, bloom,
             band_hist=band_hist,
         )
-        if debug:
-            print(f"  round {rnd} construct+dequeue-collect in {time.time() - t0:6.2f}s", flush=True)
-        # Bookkeeping rides on the writes (zero extra jobs in the common
-        # path): the crawl_log write IS the warm+count job — an Observation
-        # on it yields (dequeued, fetched_ok) while materializing the
-        # selected+fetched caches — and the frontier_delta write carries the
-        # frontier-size counts the same way. Ordering is still serial on
-        # purpose where caches are cold: Spark does not dedupe in-flight
-        # computation of a persisted partition, so parallel jobs over a cold
-        # cache would each recompute the dequeue+fetch chain (measured: 3x
-        # CPU + GC storm at local[32]).
-        t_warm = time.time()
+        domain = out["band_domain"]
+        # Bookkeeping rides on the writes (zero extra jobs): the crawl_log
+        # write IS the warm+count job — an Observation on it yields
+        # (dequeued, fetched_ok) while materializing the selected+fetched
+        # caches (and with them run_round's per-band selected counts) — and
+        # the frontier_delta or frontier snapshot write carries the band
+        # counts the same way. Ordering is still serial on purpose where
+        # caches are cold: Spark does not dedupe in-flight computation of a
+        # persisted partition, so parallel jobs over a cold cache would each
+        # recompute the dequeue+fetch chain (measured: 3x CPU + GC storm at
+        # local[32]).
         obs_a = Observation()
         log_obs = out["crawl_log"].observe(
             obs_a,
@@ -163,8 +160,6 @@ def crawl(
         ckpt.write_tables(state_dir, rnd, {"crawl_log": log_obs})
         counts = obs_a.get
         dequeued, fetched_ok = counts["n"], counts["ok"]
-        if debug:
-            print(f"  round {rnd} jobA fetch+crawl_log write in {time.time() - t_warm:6.2f}s", flush=True)
         # remaining fetched-derived outputs need only warm caches — write
         # them WHILE the discover→dedup→merge chain computes; pure overlap
         early_futs = ckpt.start_writes(
@@ -179,103 +174,41 @@ def crawl(
         # Commit O(delta): seen/bloom/frontier deltas every round; a full
         # frontier+bloom snapshot every compact_every rounds bounds both the
         # reconstruction read fan-in and the lazy cross-round plan depth.
+        # Each table below is written alone: the first one materializes the
+        # COLD discovery chain (additions, fdelta_tagged, bloom probe incl.
+        # bloom_delta) in dependency order, and the bloom write after it is a
+        # warm scan — concurrent writes would duplicate the chain in flight.
         is_compaction = rnd % max(policy.compact_every, 1) == 0
-        t_b = time.time()
-        fd_rows = None
-        fdelta_cnt = touched_cnt = 0
-        obs_b = None
-        if policy.dequeue_band_pruning and not is_compaction:
-            # Band-histogram path: the per-(old,new)-band count MAP cannot
-            # ride an Observation (fixed aggregate list only), so one tiny
-            # groupBy over the tagged delta materializes the chain AND
-            # yields the per-band deltas + the frontier-size counts.
-            fd_rows = (
-                out["fdelta_tagged"]
-                .groupBy(
-                    F.col("__touched").alias("old_band"),
-                    band_col(F.col("priority")).alias("new_band"),
-                )
-                .count()
-                .collect()
-            )
-            fdelta_cnt = sum(r["count"] for r in fd_rows)
-            touched_cnt = sum(r["count"] for r in fd_rows if r["old_band"] > -1000)
-            if debug:
-                print(f"  round {rnd} jobB fdelta in {time.time() - t_b:6.2f}s", flush=True)
         if is_compaction:
             base_round = rnd
-            # The snapshot write materializes the whole discovery chain
-            # (additions, fdelta_tagged, bloom probe incl. bloom_delta) in
-            # dependency order; the bloom write after it is a warm scan.
-            # Written one at a time — concurrent writes over these COLD
-            # caches would duplicate the chain in flight.
-            rd = ckpt.write_tables(state_dir, rnd, {"frontier": out["frontier"]})
+            snapshot, obs_f = observe_bands(out["frontier"], domain, band=band_col(F.col("priority")))
+            rd = ckpt.write_tables(state_dir, rnd, {"frontier": snapshot})
             ckpt.write_tables(
                 state_dir, rnd, {"bloom": out["bloom"].withColumn("round", F.lit(rnd))}
             )
+            # exact re-base from the snapshot (zeroes any drift)
+            band_hist = band_counts(obs_f, "band", domain)
         else:
-            fdelta = out["frontier_delta"]
-            if fd_rows is None:
-                obs_b = Observation()
-                fdelta = (
-                    out["fdelta_tagged"]
-                    .observe(
-                        obs_b,
-                        F.count(F.lit(1)).alias("n"),
-                        F.count_if(F.col("__touched") > -1000).alias("touched"),
-                    )
-                    .drop("__touched")
-                )
-            # frontier_delta first and alone (cold chain — see above), then
-            # the bloom delta as a warm scan of its persisted buckets.
-            rd = ckpt.write_tables(state_dir, rnd, {"frontier_delta": fdelta})
+            touched = F.col("__touched")
+            fdelta, obs_b = observe_bands(
+                out["fdelta_tagged"], domain,
+                old=F.when(touched > -1000, touched), new=band_col(F.col("priority")),
+            )
+            rd = ckpt.write_tables(state_dir, rnd, {"frontier_delta": fdelta.drop("__touched")})
             ckpt.write_tables(
                 state_dir, rnd, {"bloom_delta": out["bloom_delta"].withColumn("round", F.lit(rnd))}
             )
-            if obs_b is not None:
-                b = obs_b.get
-                fdelta_cnt, touched_cnt = b["n"], b["touched"]
-        if debug:
-            print(f"  round {rnd} jobB/delta-writes in {time.time() - t_b:6.2f}s", flush=True)
+            # selected rows leave their band, touched rows leave their OLD
+            # band, every delta row enters its (new) band
+            sel = band_counts(out["selected_bands"], "band", domain)
+            old = band_counts(obs_b, "old", domain)
+            new = band_counts(obs_b, "new", domain)
+            band_hist = {b: band_hist.get(b, 0) - sel[b] - old[b] + new[b] for b in domain}
+        band_hist = {b: c for b, c in band_hist.items() if c}
         for f in early_futs:  # all tables durable before the manifest commit
             f.result()
-        if debug:
-            print(f"  round {rnd} writes done at {time.time() - t0:6.2f}s", flush=True)
 
-        # Exact new-frontier size WITHOUT scanning the frontier: selected
-        # rows leave (dequeued), touched rows move into the delta
-        # (touched_cnt), the delta contributes fdelta_cnt. On compaction
-        # rounds the freshly-written snapshot's footer count is authoritative
-        # (and asserts the arithmetic's invariant cheaply at test scale).
-        if policy.dequeue_band_pruning:
-            if is_compaction:
-                # exact re-base from the snapshot (also zeroes any drift)
-                band_hist = {
-                    int(r["b"]): r["count"]
-                    for r in spark.read.parquet(os.path.join(rd, "frontier"))
-                    .groupBy(band_col(F.col("priority")).alias("b"))
-                    .count()
-                    .collect()
-                }
-            else:
-                # arithmetic update: selected rows leave their band, touched
-                # rows leave their OLD band, every delta row enters its band
-                for r in out["selected_count"].groupBy(
-                    band_col(F.col("priority")).alias("b")
-                ).count().collect():
-                    band_hist[int(r["b"])] = band_hist.get(int(r["b"]), 0) - r["count"]
-                for r in fd_rows:
-                    if r["old_band"] > -1000:
-                        band_hist[int(r["old_band"])] = band_hist.get(int(r["old_band"]), 0) - r["count"]
-                    band_hist[int(r["new_band"])] = band_hist.get(int(r["new_band"]), 0) + r["count"]
-                band_hist = {b: c for b, c in band_hist.items() if c > 0}
-        frontier_size = (
-            sum(band_hist.values())
-            if policy.dequeue_band_pruning and is_compaction
-            else spark.read.parquet(os.path.join(rd, "frontier")).count()
-            if is_compaction
-            else frontier_size - dequeued - touched_cnt + fdelta_cnt
-        )
+        frontier_size = sum(band_hist.values())
         seen_size += dequeued
         metrics = ckpt.RoundMetrics(
             round_no=rnd,
@@ -292,8 +225,6 @@ def crawl(
         if init_frontier is not None:
             init_frontier.unpersist()
             init_frontier = None
-        if debug:
-            print(f"  round {rnd}: dequeued={dequeued} total={time.time() - t0:6.2f}s", flush=True)
         total_fetched += dequeued
         # Next-round state from COMMITTED parquet (bounded lineage, O(delta)
         # reads): the frontier chains one broadcast-filtered delta per round

@@ -37,6 +37,12 @@ class CrawlPolicy:
     rate: float = 2.0  # tokens refilled per round
     max_urls_per_round: int = 200  # global round cap (by total order)
     max_rounds: int = 6
+    # EXACT dequeue band pruning is always on for round caps above 20_000
+    # (plans/round.py dequeue): the ranking scan is restricted to the top
+    # priority bands holding >= 2x the cap, using the band histogram the
+    # crawl loop commits with every round from counts that ride the round's
+    # own writes — at a 10^10 frontier the per-round dequeue is O(top bands),
+    # not O(state). max_depth bounds the bands to 4 - max_depth .. 10.
     max_depth: int = 8
     # bloom pre-filter for the dedup anti-join (operators/seen.py); never
     # decides membership — False only moves all work to the exact join
@@ -46,13 +52,6 @@ class CrawlPolicy:
     # full frontier/bloom snapshot every N rounds (rounds in between commit
     # O(delta) only); bounds both resume read fan-in and cross-round plan depth
     compact_every: int = 4
-    # EXACT dequeue band pruning (plans/round.py dequeue): restrict the
-    # ranking scan to the top priority bands holding >= 2x the round cap,
-    # using a histogram maintained arithmetically by the crawl loop — at a
-    # 10^10 frontier this turns the per-round dequeue from O(state) into
-    # O(top bands). Off by default: at sandbox frontiers the saved scan is
-    # smaller than the extra per-round histogram job.
-    dequeue_band_pruning: bool = False
     # P6 wired into the round: pages with a generic <title> do not expand
     # their outlinks (the page itself is still fetched/logged/kept) —
     # mirrors the reference gating its expensive stage on the relevance

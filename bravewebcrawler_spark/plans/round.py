@@ -37,7 +37,7 @@ from contextlib import contextmanager
 
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -384,6 +384,45 @@ def band_col(priority: Column) -> Column:
     return F.round(priority * 4).cast("int")
 
 
+def band_domain(policy: CrawlPolicy, band_hist: dict[int, int] | None) -> list[int]:
+    """Every band a frontier row can hold.
+
+    ``priority = {1,2} + {0,0.5} - 0.25*depth`` with ``0 <= depth <=
+    max_depth`` (admit_candidates), so admitted rows lie in bands
+    ``4 - max_depth .. 10``. A crawl resumed under a lower ``max_depth``
+    still holds deeper rows; the bands of ``band_hist`` keep them counted."""
+    return sorted(set(range(4 - policy.max_depth, 11)) | set(band_hist or ()))
+
+
+def observe_bands(
+    df: DataFrame, domain: list[int], **bands: Column
+) -> tuple[DataFrame, Observation]:
+    """``df`` observed with, per named band column, its non-null count and
+    one ``count_if`` per band of ``domain``. The aggregate list is fixed, so
+    the counts ride the first action that runs ``df`` (no job of their own);
+    read them back with band_counts."""
+    obs = Observation()
+    aggs = []
+    for name, band in bands.items():
+        aggs.append(F.count(band).alias(name))
+        aggs += [F.count_if(band == b).alias(f"{name}{b}") for b in domain]
+    return df.observe(obs, *aggs), obs
+
+
+def band_counts(obs: Observation, name: str, domain: list[int]) -> dict[int, int]:
+    """Per-band counts of band column ``name`` from observe_bands. Raises when
+    they do not add up to the column's total: a row outside ``domain`` would
+    otherwise vanish from the histogram silently."""
+    got = obs.get
+    counts = {b: got[f"{name}{b}"] for b in domain}
+    if sum(counts.values()) != got[name]:
+        raise RuntimeError(
+            f"band counts of {name!r} sum to {sum(counts.values())}, not {got[name]}: "
+            f"a row lies outside bands {domain}"
+        )
+    return counts
+
+
 def _band_threshold(band_hist: dict[int, int], target: int) -> int:
     """Smallest band (scanning from the top) whose cumulative frontier rows
     reach ``target``; the lowest band if the whole frontier is smaller."""
@@ -408,17 +447,19 @@ def dequeue(
 
     Returns frontier columns + ``seq`` (dequeue position within the round).
 
-    ``band_hist`` (band -> frontier row count, maintained arithmetically by
-    the crawl loop) enables EXACT band pruning at scale: ranking the whole
-    10^10-row frontier each round to select ~10^6 is O(state) work; with the
-    histogram the scan is restricted to the top priority bands holding >= 2x
-    the cap. Exactness argument: politeness windows order by priority DESC,
-    so dropping strictly-lower bands never changes an included row's
-    row_number; if the pruned survivor count still reaches the cap, every
-    global top-cap row lies in the included bands (anything below the
-    threshold band is outranked by all cap selected rows). When the pruned
-    survivors fall short (budget-starved top bands), one fallback pass runs
-    unpruned — detected from the survivor total the rank-cap computes anyway.
+    EXACT band pruning whenever ``band_hist`` (band -> frontier row count,
+    committed with every round by the crawl loop) is given and the cap takes
+    the large-cap rank path (``cap > 20_000``, the only path that reports a
+    survivor total): ranking the whole 10^10-row frontier each round to
+    select ~10^6 is O(state) work; with the histogram the scan is restricted
+    to the top priority bands holding >= 2x the cap. Exactness argument:
+    politeness windows order by priority DESC, so dropping strictly-lower
+    bands never changes an included row's row_number; if the pruned survivor
+    count still reaches the cap, every global top-cap row lies in the
+    included bands (anything below the threshold band is outranked by all
+    cap selected rows). When the pruned survivors fall short (budget-starved
+    top bands), one fallback pass runs unpruned — detected from the survivor
+    total the rank-cap computes anyway.
     """
     from bravewebcrawler_spark.operators.politeness import host_budget
 
@@ -439,12 +480,7 @@ def dequeue(
         # global round cap + seq assignment (distributed for large caps)
         return _global_rank_cap(phase2, order, cap, cache_registry)
 
-    prune = (
-        policy.dequeue_band_pruning
-        and band_hist
-        and cap > 20_000  # the small-cap path never reports survivor totals
-    )
-    if prune:
+    if band_hist and cap > 20_000:  # the small-cap path never reports survivor totals
         thr = _band_threshold(band_hist, 2 * cap)
         if thr > min(band_hist):
             pruned, total = rank(frontier.where(band_col(F.col("priority")) >= thr))
@@ -473,12 +509,13 @@ def run_round(
     WRITES is bounded by the round, not by total state —
       * ``seen_delta``      — this round's selected keys only,
       * ``bloom_delta``     — only buckets that received hashes,
-      * ``frontier_delta``  — only rows whose key was (re)discovered this
-        round, min-depth-merged against their current frontier version.
-    The full-state views (``frontier``/``seen``/``bloom``) are lazy unions
-    for in-round consumers and the periodic compaction write; the caller
-    (plans/crawl.py) re-derives next-round state from the committed delta
-    parquet so lineage never chains through a round's cached internals.
+      * ``fdelta_tagged``   — the frontier delta: only rows whose key was
+        (re)discovered this round, min-depth-merged against their current
+        frontier version, plus the ``__touched`` old-band tag.
+    The full-state views (``frontier``/``bloom``) are lazy unions for the
+    periodic compaction write; the caller (plans/crawl.py) re-derives
+    next-round state from the committed delta parquet so lineage never
+    chains through a round's cached internals.
 
     The frontier split is two BROADCAST joins (selected keys <= round cap;
     discovered keys <= round fan-out), i.e. map-side filters — the frontier
@@ -502,14 +539,20 @@ def run_round(
     # this). seq is already assigned, so spreading by url_hash is free.
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cached: list[DataFrame] = []
-    selected = (
+    # per-band counts of the selected rows ride the action that first fills
+    # the selected cache (the caller's crawl_log write). Observed AFTER the
+    # shuffle: there the counts run in that write's result stage, where each
+    # task's update counts once — a re-run shuffle-map stage would count twice.
+    domain = band_domain(policy, band_hist)
+    selected, selected_bands = observe_bands(
         dequeue(
             frontier, host_state, policy, refill=round_no > 0,
             cache_registry=cached, band_hist=band_hist,
-        )
-        .repartition(n_part, F.col("url_hash"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ).repartition(n_part, F.col("url_hash")),
+        domain,
+        band=band_col(F.col("priority")),
     )
+    selected = selected.persist(StorageLevel.MEMORY_AND_DISK)
 
     fetched = (
         selected.select("url_canon", "url_hash", "seq", "depth", "attempts")
@@ -626,9 +669,9 @@ def run_round(
         "attempts",
     )
     additions = discovered.unionByName(retry)
-    # additions feeds three consumers (the touched-keys broadcast below,
-    # frontier_delta, and the warm/metrics count) — persist it so the
-    # explode→canonicalize→dedup chain runs once per round.
+    # additions feeds two consumers (the touched-keys join below and the
+    # frontier delta merge) — persist it so the explode→canonicalize→dedup
+    # chain runs once per round.
     additions = additions.persist(StorageLevel.MEMORY_AND_DISK)
     cached.append(additions)
 
@@ -648,15 +691,14 @@ def run_round(
     remaining = frontier.join(selected_keys, "url_hash", "left_anti")
     touched = remaining.join(touched_keys, "url_hash", "left_semi")
     untouched = remaining.join(touched_keys, "url_hash", "left_anti")
-    # __touched piggybacks on the merge shuffle so the caller can derive the
-    # new frontier size ARITHMETICALLY (prev - selected - touched + |delta|)
-    # instead of scanning the full frontier for a metrics count — at a 10^10
-    # frontier an O(state) read per round just for a progress number. The tag
-    # value is the touched row's OLD priority band (NOT a boolean): the same
-    # merge then also yields the per-band removals the dequeue band histogram
-    # needs; -1000 marks brand-new keys (max() keeps the old band when both
-    # versions of a key are present — a frontier key is unique, so at most
-    # one tagged row per key carries a real band).
+    # __touched piggybacks on the merge shuffle so the caller can update the
+    # band histogram (and with it the frontier size) ARITHMETICALLY instead
+    # of scanning the full frontier — at a 10^10 frontier an O(state) read
+    # per round just for a progress number. The tag value is the touched
+    # row's OLD priority band: the row leaves that band and its merged
+    # version enters its new one; -1000 marks brand-new keys (max() keeps
+    # the old band when both versions of a key are present — a frontier key
+    # is unique, so at most one tagged row per key carries a real band).
     fdelta_tagged = merge_frontier(
         touched.withColumn("__touched", band_col(F.col("priority"))).unionByName(
             additions.withColumn("__touched", F.lit(-1000))
@@ -669,17 +711,14 @@ def run_round(
 
     return {
         "frontier": new_frontier,
-        "frontier_delta": frontier_delta,
-        "fdelta_tagged": fdelta_tagged,
-        "seen": new_seen,
+        "fdelta_tagged": fdelta_tagged,  # frontier delta + __touched (old band)
         "seen_delta": seen_delta,
         "host_state": new_host_state,
         "bloom": new_bloom,
         "bloom_delta": bloom_delta,
         "documents": documents,
         "crawl_log": crawl_log,
-        "selected_count": selected,  # caller may count for the empty-round gate
-        "fetched": fetched,
-        "additions": additions,  # discovered ∪ retries (frontier delta input)
+        "selected_bands": selected_bands,  # observe_bands "band" of the selected rows
+        "band_domain": domain,  # the bands every observe_bands of this round counts
         "_cached": cached,  # caller unpersists after commit
     }
